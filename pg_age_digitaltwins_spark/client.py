@@ -399,8 +399,14 @@ class DigitalTwinsSparkClient:
     def checkpoint(self, path: str | None = None, compact: bool = False) -> None:
         """Storage maintenance (SURVEY §7 hard-#5: update-heavy OLTP on
         immutable snapshots).  Every point mutation swaps in a plan
-        built on the previous one, so after N mutations each query
-        replays an N-deep anti-join/union chain.  With ``path``, rewrite
+        built on the previous one: the base filtered by the written keys,
+        unioned with the written rows as a ``LocalRelation`` overlay
+        (``crud._merge_twin_rows``).  The optimizer folds an overlay a
+        read cannot match away at plan time and sizes the rest exactly,
+        so joins over a mutated table still broadcast; what N mutations
+        still cost is N key filters on every base scan, N union legs to
+        plan, and — after a relationship write — the loss of the
+        bucketed incoming-edge and long-id indexes.  With ``path``, rewrite
         the store in the partitioned parquet layout and reload — the
         Delta ``OPTIMIZE``/compaction equivalent, restoring partition
         pruning and statistics; without, cut the lineage in place with

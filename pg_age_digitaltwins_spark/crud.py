@@ -32,6 +32,7 @@ from pg_age_digitaltwins_spark.store.graph_store import (
     TWIN_SCHEMA,
     _rel_row,
     _twin_row,
+    local_frame,
     with_vdoc,
 )
 from pg_age_digitaltwins_spark.validation import (
@@ -75,8 +76,11 @@ def generate_etag(entity_id: str, ts_iso: str) -> str:
 
 def get_twin(store: GraphStore, dt_id: str) -> dict[str, Any]:
     """D1: point lookup — a filter on the promoted unique-key column
-    (the reference's unique ``$dtId`` index, ``DigitalTwins.cs:92-116``)."""
-    rows = store.twins.filter(F.col("dt_id") == dt_id).select("doc").take(1)
+    (the reference's unique ``$dtId`` index, ``DigitalTwins.cs:92-116``).
+    The key matches at most one row, so the read is one ``collect`` job
+    over every partition; ``take(1)`` would scan partition 0 first and
+    launch a second job whenever the twin lives in another one."""
+    rows = store.twins.filter(F.col("dt_id") == dt_id).select("doc").collect()
     if not rows:
         raise NotFoundError(f"Digital Twin with ID {dt_id} not found")
     return json.loads(rows[0][0])
@@ -131,9 +135,14 @@ def _looks_like_component(value: dict[str, Any]) -> bool:
 
 def _merge_twin_rows(store: GraphStore, rows: list[tuple], ids: list[str]) -> GraphStore:
     """MERGE: delete-by-key + insert, one shuffle-free union of the
-    filtered base with a tiny literal DataFrame.  Materialized stores
-    carry a VARIANT ``vdoc`` column, so both sides are normalized."""
-    new_df = store.spark.createDataFrame(rows, TWIN_SCHEMA)
+    filtered base with the written rows as a ``LocalRelation`` overlay
+    (``local_frame``).  A point read of another twin drops the overlay
+    at plan time, and joins over the mutated table still broadcast; an
+    overlay costs one ``NOT IN`` key filter on the base scan and one
+    union leg to plan until the next commit or ``checkpoint``.
+    Materialized stores carry a VARIANT ``vdoc`` column, so both sides
+    are normalized."""
+    new_df = local_frame(store.spark, rows, TWIN_SCHEMA)
     base = store.twins.filter(~F.col("dt_id").isin(ids))
     if "vdoc" in base.columns:
         new_df = with_vdoc(new_df)
@@ -343,14 +352,24 @@ def update_component(
 # relationships (D6-D8)
 # ----------------------------------------------------------------------
 
+def _rel_key(dt_id: str, rel_id: str):
+    """The relationship primary key ``(source_id, relationship_id)``."""
+    return (F.col("source_id") == dt_id) & (F.col("relationship_id") == rel_id)
+
+
+def _merge_rel_rows(store: GraphStore, rows: list[tuple], drop) -> GraphStore:
+    """Relationship MERGE, shaped like ``_merge_twin_rows``: the base
+    rows matching ``drop`` are replaced by ``rows``."""
+    new_df = local_frame(store.spark, rows, REL_SCHEMA)
+    base = store.relationships.filter(~drop)
+    if "vdoc" in base.columns:
+        new_df = with_vdoc(new_df)
+    return _replace(store, relationships=base.unionByName(new_df))
+
+
 def get_relationship(store: GraphStore, dt_id: str, rel_id: str) -> dict[str, Any]:
-    rows = (
-        store.relationships.filter(
-            (F.col("source_id") == dt_id) & (F.col("relationship_id") == rel_id)
-        )
-        .select("doc")
-        .take(1)
-    )
+    # one job, as in get_twin: the primary key matches at most one row
+    rows = store.relationships.filter(_rel_key(dt_id, rel_id)).select("doc").collect()
     if not rows:
         raise NotFoundError(f"Relationship {rel_id} on {dt_id} not found")
     return json.loads(rows[0][0])
@@ -439,14 +458,8 @@ def create_or_replace_relationship(
                 )
     ts = ts or now_iso()
     doc["$etag"] = generate_etag(rel_id, ts)
-    row = _rel_row(doc)
-    base = store.relationships.filter(
-        ~((F.col("source_id") == dt_id) & (F.col("relationship_id") == rel_id))
-    )
-    new_df = store.spark.createDataFrame([row], REL_SCHEMA)
-    if "vdoc" in base.columns:
-        new_df = with_vdoc(new_df)
-    return _replace(store, relationships=base.unionByName(new_df)), doc, old
+    store2 = _merge_rel_rows(store, [_rel_row(doc)], _rel_key(dt_id, rel_id))
+    return store2, doc, old
 
 
 def update_relationship(
@@ -472,14 +485,8 @@ def update_relationship(
         raise ValidationError("Cannot patch $targetId of a relationship")
     ts = ts or now_iso()
     patched["$etag"] = generate_etag(rel_id, ts)
-    row = _rel_row(patched)
-    base = store.relationships.filter(
-        ~((F.col("source_id") == dt_id) & (F.col("relationship_id") == rel_id))
-    )
-    new_df = store.spark.createDataFrame([row], REL_SCHEMA)
-    if "vdoc" in base.columns:
-        new_df = with_vdoc(new_df)
-    return _replace(store, relationships=base.unionByName(new_df)), patched, old
+    store2 = _merge_rel_rows(store, [_rel_row(patched)], _rel_key(dt_id, rel_id))
+    return store2, patched, old
 
 
 def delete_relationship(
@@ -491,9 +498,7 @@ def delete_relationship(
     return (
         _replace(
             store,
-            relationships=store.relationships.filter(
-                ~((F.col("source_id") == dt_id) & (F.col("relationship_id") == rel_id))
-            ),
+            relationships=store.relationships.filter(~_rel_key(dt_id, rel_id)),
         ),
         old,
     )
@@ -555,9 +560,5 @@ def create_relationships_batch(
     if not rows:
         return store, results, changes
     key_col = F.concat_ws("\x00", F.col("source_id"), F.col("relationship_id"))
-    key_lits = ["\x00".join(k) for k in keys]
-    base = store.relationships.filter(~key_col.isin(key_lits))
-    new_df = store.spark.createDataFrame(rows, REL_SCHEMA)
-    if "vdoc" in base.columns:
-        new_df = with_vdoc(new_df)
-    return _replace(store, relationships=base.unionByName(new_df)), results, changes
+    drop = key_col.isin(["\x00".join(k) for k in keys])
+    return _merge_rel_rows(store, rows, drop), results, changes

@@ -1146,6 +1146,14 @@ class CypherCompiler:
             if rel_types is not None:
                 rels_frame = rels_frame.filter(F.col("name").isin(rel_types))
             weight_col = None
+            if weight_prop is not None and key == "graph.louvain":
+                # Louvain drops self-loops; drop them before the weight
+                # check so it sees exactly the edges the operator reads
+                # (over a LocalRelation the optimizer evaluates the
+                # check before any later filter)
+                rels_frame = rels_frame.filter(
+                    F.col("source_id") != F.col("target_id")
+                )
             if weight_prop is not None:
                 # missing property -> 1.0 (the GDS defaultValue
                 # convention); DEFINED-but-non-numeric and negative
@@ -2055,7 +2063,12 @@ class CypherCompiler:
             self._vlen_aliases.add(edge.alias)
         base_rel, _ = self._edge_frame(edge)
         w_alias = self._anon_alias()
-        wframe = base_rel.alias(w_alias)
+        # self-loops never lie on a shortest path: drop them BEFORE the
+        # weight check, which the optimizer may evaluate ahead of any
+        # later filter (over a LocalRelation it runs at plan time)
+        wframe = base_rel.filter(F.col("source_id") != F.col("target_id")).alias(
+            w_alias
+        )
         # per-edge prop-map predicates (r13 fix — see _edge_base)
         for key, lit in edge.props.items():
             wframe = wframe.filter(self._prop_eq(w_alias, "rel", key, lit))
@@ -2101,8 +2114,7 @@ class CypherCompiler:
                 )
             )
         wedges = (
-            base.filter(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
+            base.groupBy("src", "dst")
             .agg(F.min("w").alias("w"))
             .localCheckpoint(eager=False)
         )

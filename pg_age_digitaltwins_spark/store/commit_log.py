@@ -51,9 +51,20 @@ from collections import Counter
 from dataclasses import dataclass
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from pg_age_digitaltwins_spark.store.graph_store import GraphStore, with_vdoc
+from pg_age_digitaltwins_spark.store.graph_store import (
+    MODEL_EDGE_SCHEMA,
+    MODEL_SCHEMA,
+    REL_SCHEMA,
+    TWIN_SCHEMA,
+    GraphStore,
+    _rel_row,
+    _twin_row,
+    local_frame,
+    stored_schema,
+    with_vdoc,
+)
 from pg_age_digitaltwins_spark.streaming.changes import (
     EVENT_DATA_SCHEMA,
     EventData,
@@ -61,6 +72,16 @@ from pg_age_digitaltwins_spark.streaming.changes import (
 )
 
 _VERSION_DIGITS = 20
+
+# MERGE delete keys: a twin ``dt_id``, and a relationship
+# ``(source_id, relationship_id)`` whose NULL source matches every source
+_TWIN_KEY_SCHEMA = T.StructType([T.StructField("dt_id", T.StringType())])
+_REL_KEY_SCHEMA = T.StructType(
+    [
+        T.StructField("source_id", T.StringType()),
+        T.StructField("relationship_id", T.StringType()),
+    ]
+)
 
 
 class CommitConflict(Exception):
@@ -436,12 +457,12 @@ def _read_parts(
     partition column from the directory names; groups union together.
     The union width is O(number of contributing versions), not
     O(partitions) — and a periodic full ``commit_snapshot`` (the
-    compaction equivalent) resets it to 1."""
-    from pg_age_digitaltwins_spark.store.graph_store import with_vdoc as _wv
-
+    compaction equivalent) resets it to 1.  The stored schema is
+    supplied, so no group pays a parquet footer job to infer it."""
     cols = [f.name for f in schema.fields] + ["vdoc"]
     if not parts:
-        return _wv(spark.createDataFrame([], schema)).select(*cols)
+        return with_vdoc(local_frame(spark, [], schema)).select(*cols)
+    disk = stored_schema(schema, partition_col)
     groups: dict[str, list[str]] = {}
     for rel in parts.values():
         parent = os.path.dirname(os.path.join(root, rel))
@@ -449,9 +470,9 @@ def _read_parts(
     out = None
     for parent, paths in sorted(groups.items()):
         df = (
-            spark.read.option("basePath", parent)
+            spark.read.schema(disk)
+            .option("basePath", parent)
             .parquet(*sorted(paths))
-            .withColumn(partition_col, F.col(partition_col).cast("string"))
             .select(*cols)
         )
         out = df if out is None else out.unionByName(df)
@@ -461,27 +482,18 @@ def _read_parts(
 def load_version(spark: SparkSession, root: str, version: int) -> GraphStore:
     """Time travel: load the graph as of a specific committed version
     (``VERSION AS OF`` semantics).  Format-1 manifests load their full
-    snapshot dir; format-2 assemble per-table references."""
-    from pyspark.sql.utils import AnalysisException
-
+    snapshot dir; format-2 assemble per-table references.  Every read
+    is given its known schema, so loading runs no Spark job."""
     log = CommitLog(root)
     m = log.manifest(version)
     tables = m.get("tables")
     if not tables:
         return GraphStore.load(spark, os.path.join(root, m["data_dir"]))
 
-    from pg_age_digitaltwins_spark.store.graph_store import (
-        MODEL_EDGE_SCHEMA,
-        MODEL_SCHEMA,
-        REL_SCHEMA,
-        TWIN_SCHEMA,
-    )
-
     def read_dim(table: str, schema) -> DataFrame:
-        try:
-            return spark.read.parquet(os.path.join(root, tables[table]["dir"]))
-        except AnalysisException:
-            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(
+            os.path.join(root, tables[table]["dir"])
+        )
 
     return GraphStore(
         spark=spark,
@@ -566,7 +578,7 @@ def read_changes_since(
             if os.path.isdir(d):
                 dirs.append(d)
     if not dirs:
-        return spark.createDataFrame([], EVENT_DATA_SCHEMA)
+        return local_frame(spark, [], EVENT_DATA_SCHEMA)
     return (
         spark.read.schema(EVENT_DATA_SCHEMA)
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSS")
@@ -720,13 +732,6 @@ def merge_rows(
     """
     from datetime import datetime, timezone
 
-    from pg_age_digitaltwins_spark.store.graph_store import (
-        REL_SCHEMA,
-        TWIN_SCHEMA,
-        _rel_row,
-        _twin_row,
-    )
-
     ts = timestamp or datetime.now(timezone.utc).isoformat(timespec="milliseconds")
     twin_up = [_stamp_etag(_as_doc(d)) for d in twin_upserts]
     rel_up = [_stamp_etag(_as_doc(d)) for d in rel_upserts]
@@ -767,31 +772,22 @@ def merge_rows(
     # events and RI checks executor-side.
     n_keys = len(twin_up) + len(twin_del) + len(rel_up) + len(rel_del)
     if n_keys > distributed_threshold:
-        from pg_age_digitaltwins_spark.store.graph_store import (
-            REL_SCHEMA as _RS,
-            TWIN_SCHEMA as _TS,
-            _rel_row as _rr,
-            _twin_row as _tr,
-        )
-
         return merge_frames(
             spark, root,
             twin_upserts=(
-                spark.createDataFrame([_tr(d) for d in twin_up], _TS)
+                local_frame(spark, [_twin_row(d) for d in twin_up], TWIN_SCHEMA)
                 if twin_up else None
             ),
             twin_deletes=(
-                spark.createDataFrame([(k,) for k in twin_del], "dt_id string")
+                local_frame(spark, [(k,) for k in twin_del], _TWIN_KEY_SCHEMA)
                 if twin_del else None
             ),
             rel_upserts=(
-                spark.createDataFrame([_rr(d) for d in rel_up], _RS)
+                local_frame(spark, [_rel_row(d) for d in rel_up], REL_SCHEMA)
                 if rel_up else None
             ),
             rel_deletes=(
-                spark.createDataFrame(
-                    rel_del, "source_id string, relationship_id string"
-                )
+                local_frame(spark, rel_del, _REL_KEY_SCHEMA)
                 if rel_del else None
             ),
             max_attempts=max_attempts, writer=writer, timestamp=ts,
@@ -816,11 +812,11 @@ def merge_rows(
                     f"rel_upserts reference missing twins {missing}"
                 )
             fresh = GraphStore.empty(spark)
-            fresh.twins = spark.createDataFrame(
-                [_twin_row(d) for d in twin_up], TWIN_SCHEMA
+            fresh.twins = local_frame(
+                spark, [_twin_row(d) for d in twin_up], TWIN_SCHEMA
             )
-            fresh.relationships = spark.createDataFrame(
-                [_rel_row(d) for d in rel_up], REL_SCHEMA
+            fresh.relationships = local_frame(
+                spark, [_rel_row(d) for d in rel_up], REL_SCHEMA
             )
             events = [
                 _merge_event(d["$dtId"], "Twin", None, d, "Insert", ts)
@@ -869,8 +865,8 @@ def merge_rows(
                 events.append(
                     _merge_event(k, "Twin", prev[1], None, "Delete", ts)
                 )
-            rows = spark.createDataFrame(
-                [_twin_row(d) for d in twin_up], TWIN_SCHEMA
+            rows = local_frame(
+                spark, [_twin_row(d) for d in twin_up], TWIN_SCHEMA
             )
             new_twins = (
                 with_vdoc(store.twins)
@@ -926,8 +922,8 @@ def merge_rows(
             pred = F.struct(
                 F.col("source_id"), F.col("relationship_id")
             ).isin([F.struct(F.lit(s), F.lit(r)) for s, r in matched_keys]) if matched_keys else F.lit(False)
-            rows = spark.createDataFrame(
-                [_rel_row(d) for d in rel_up], REL_SCHEMA
+            rows = local_frame(
+                spark, [_rel_row(d) for d in rel_up], REL_SCHEMA
             )
             new_rels = (
                 with_vdoc(store.relationships)
@@ -1046,11 +1042,6 @@ def merge_frames(
     """
     from datetime import datetime, timezone
 
-    from pg_age_digitaltwins_spark.store.graph_store import (
-        REL_SCHEMA,
-        TWIN_SCHEMA,
-    )
-
     ts = timestamp or datetime.now(timezone.utc).isoformat(timespec="milliseconds")
     t_up = twin_upserts
     t_del = twin_deletes
@@ -1103,11 +1094,11 @@ def merge_frames(
         # -- twins ------------------------------------------------------
         new_twins = with_vdoc(store.twins)
         if t_up is not None or t_del is not None:
-            up = t_up if t_up is not None else spark.createDataFrame([], TWIN_SCHEMA)
+            up = t_up if t_up is not None else local_frame(spark, [], TWIN_SCHEMA)
             dl = (
                 t_del.join(up.select("dt_id"), "dt_id", "left_anti")
                 if t_del is not None
-                else spark.createDataFrame([], "dt_id string")
+                else local_frame(spark, [], _TWIN_KEY_SCHEMA)
             )  # upsert wins: no Delete event, row survives
             effective_t_del = dl
             old = store.twins.select(
@@ -1159,13 +1150,11 @@ def merge_frames(
         # -- relationships ---------------------------------------------
         new_rels = with_vdoc(store.relationships)
         if r_up is not None or r_del is not None:
-            rup = r_up if r_up is not None else spark.createDataFrame([], REL_SCHEMA)
+            rup = r_up if r_up is not None else local_frame(spark, [], REL_SCHEMA)
             rdl = (
                 r_del
                 if r_del is not None
-                else spark.createDataFrame(
-                    [], "source_id string, relationship_id string"
-                )
+                else local_frame(spark, [], _REL_KEY_SCHEMA)
             )
             old_r = store.relationships.select(
                 "source_id", "relationship_id",

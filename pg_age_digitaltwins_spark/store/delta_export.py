@@ -46,6 +46,7 @@ from pg_age_digitaltwins_spark.store.commit_log import (
     _PARTITION_COLS,
     CommitLog,
 )
+from pg_age_digitaltwins_spark.store.graph_store import local_frame
 
 _LOG_DIR = "_delta_log"
 
@@ -490,7 +491,7 @@ def read_delta_export(
     active = {p: m["partitionValues"] for p, m in active_m.items()}
     schema = T.StructType.fromJson(json.loads(schema_json))
     if not active:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     parts = []
     for path, pv in sorted(active.items()):
         df = spark.read.parquet(os.path.join(dest, path))
@@ -526,7 +527,7 @@ def import_delta_graph(
 
     def load(path: str | None, schema: T.StructType) -> DataFrame:
         if path is None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         df = read_delta_export(spark, path)
         cols = []
         for f in schema.fields:

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, ClassVar, Iterable
+from typing import Any, ClassVar, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -79,6 +79,60 @@ MODEL_EDGE_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType(), False),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
+) -> DataFrame:
+    """A frame of Python rows whose plan leaf is a ``LocalRelation``.
+
+    ``createDataFrame(<list>, schema)`` plans a ``LogicalRDD`` with no
+    size statistics, so a CRUD overlay built that way is never pruned
+    and turns every join over the mutated table into a shuffled
+    sort-merge join.  An Arrow table typed with the exact schema plans
+    a ``LocalRelation``: the optimizer folds filters over it at plan
+    time and knows its size.  Rows pass the list path's own verifier,
+    so they raise the same errors, and a naive ``datetime`` is read in
+    the process's zone, as ``createDataFrame`` reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for f, values in zip(schema.fields, cols):
+        if isinstance(f.dataType, T.TimestampType):
+            micros = pa.array([f.dataType.toInternal(v) for v in values], pa.int64())
+            arrays.append(micros.cast(to_arrow_type(f.dataType)))
+        else:
+            arrays.append(pa.array(values, to_arrow_type(f.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema
+    )
+
+
+def stored_schema(
+    schema: T.StructType, partition_col: str | None = None
+) -> T.StructType:
+    """The schema ``save`` leaves on disk for a table of ``schema``.
+
+    Partitioned tables (twins by ``model_id``, relationships by
+    ``name``) carry the persisted VARIANT ``vdoc`` and read their
+    partition column back, as a string, after the data columns — the
+    order schema inference would give.  The dims are stored as is."""
+    if partition_col is None:
+        return schema
+    data = [f for f in schema.fields if f.name != partition_col]
+    return T.StructType(
+        data
+        + [
+            T.StructField("vdoc", T.VariantType(), True),
+            T.StructField(partition_col, T.StringType(), True),
+        ]
+    )
 
 
 def with_vdoc(df: DataFrame) -> DataFrame:
@@ -181,10 +235,10 @@ class GraphStore:
     def empty(cls, spark: SparkSession) -> "GraphStore":
         return cls(
             spark=spark,
-            twins=spark.createDataFrame([], TWIN_SCHEMA),
-            relationships=spark.createDataFrame([], REL_SCHEMA),
-            models=spark.createDataFrame([], MODEL_SCHEMA),
-            model_edges=spark.createDataFrame([], MODEL_EDGE_SCHEMA),
+            twins=local_frame(spark, [], TWIN_SCHEMA),
+            relationships=local_frame(spark, [], REL_SCHEMA),
+            models=local_frame(spark, [], MODEL_SCHEMA),
+            model_edges=local_frame(spark, [], MODEL_EDGE_SCHEMA),
         )
 
     @classmethod
@@ -200,12 +254,12 @@ class GraphStore:
         store = cls.empty(spark)
         if model_docs:
             store = store.with_models(model_docs)
-        twins = [_twin_row(d) for d in map(_as_dict, twin_docs)]
-        rels = [_rel_row(d) for d in map(_as_dict, relationship_docs)]
-        if twins:
-            store.twins = spark.createDataFrame(twins, TWIN_SCHEMA)
-        if rels:
-            store.relationships = spark.createDataFrame(rels, REL_SCHEMA)
+        store.twins = local_frame(
+            spark, [_twin_row(d) for d in map(_as_dict, twin_docs)], TWIN_SCHEMA
+        )
+        store.relationships = local_frame(
+            spark, [_rel_row(d) for d in map(_as_dict, relationship_docs)], REL_SCHEMA
+        )
         return store
 
     def with_models(self, model_docs: Iterable[dict[str, Any] | str]) -> "GraphStore":
@@ -229,18 +283,12 @@ class GraphStore:
                     None,
                 )
             )
-        models_df = self.spark.createDataFrame(rows, MODEL_SCHEMA)
-        edges_df = (
-            self.spark.createDataFrame(edges, MODEL_EDGE_SCHEMA)
-            if edges
-            else self.spark.createDataFrame([], MODEL_EDGE_SCHEMA)
-        )
         return GraphStore(
             spark=self.spark,
             twins=self.twins,
             relationships=self.relationships,
-            models=models_df,
-            model_edges=edges_df,
+            models=local_frame(self.spark, rows, MODEL_SCHEMA),
+            model_edges=local_frame(self.spark, edges, MODEL_EDGE_SCHEMA),
             _descendants=descendants,
         )
 
@@ -598,24 +646,22 @@ class GraphStore:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "GraphStore":
-        from pyspark.sql.utils import AnalysisException
+        """Load a ``save``/``save_compacted`` layout.  The schemas are
+        known, so the read infers nothing: no parquet footer jobs, and
+        an EMPTY partitioned table (no parquet files) reads as an empty
+        frame instead of failing inference."""
 
-        def read(sub: str, schema: T.StructType, vdoc: bool) -> DataFrame:
-            # An EMPTY partitioned table writes no parquet files, so the
-            # read cannot infer a schema — fall back to the canonical
-            # empty frame (with the vdoc column save() would have added).
-            try:
-                return spark.read.parquet(f"{path}/{sub}")
-            except AnalysisException:
-                df = spark.createDataFrame([], schema)
-                return with_vdoc(df) if vdoc else df
+        def read(sub: str, schema: T.StructType, partition_col=None) -> DataFrame:
+            return spark.read.schema(stored_schema(schema, partition_col)).parquet(
+                f"{path}/{sub}"
+            )
 
         return cls(
             spark=spark,
-            twins=read("twins", TWIN_SCHEMA, True),
-            relationships=read("relationships", REL_SCHEMA, True),
-            models=read("models", MODEL_SCHEMA, False),
-            model_edges=read("model_edges", MODEL_EDGE_SCHEMA, False),
+            twins=read("twins", TWIN_SCHEMA, "model_id"),
+            relationships=read("relationships", REL_SCHEMA, "name"),
+            models=read("models", MODEL_SCHEMA),
+            model_edges=read("model_edges", MODEL_EDGE_SCHEMA),
         )
 
 

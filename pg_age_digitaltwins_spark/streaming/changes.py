@@ -24,6 +24,8 @@ from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from pg_age_digitaltwins_spark.store.graph_store import local_frame
+
 EVENT_DATA_SCHEMA = T.StructType(
     [
         T.StructField("entity_id", T.StringType(), False),
@@ -177,7 +179,7 @@ class ChangeLog:
             )
             for e in (self.events if events is None else events)
         ]
-        return spark.createDataFrame(rows, EVENT_DATA_SCHEMA)
+        return local_frame(spark, rows, EVENT_DATA_SCHEMA)
 
     def drain(self) -> list[EventData]:
         out, self.events = self.events, []

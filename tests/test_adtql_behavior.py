@@ -545,10 +545,17 @@ def test_keyset_pagination_mixed_duplicates_all_page_sizes(client):
         assert sorted(seen) == expected, f"page size {n}"
 
 
-def test_explain_surfaces_physical_plan(client):
+def test_explain_surfaces_physical_plan(fixture_store, tmp_path):
     """client.explain returns the formatted Spark plan with the scan
     pushdown visible — the EXPLAIN diagnostics parity
-    (QueryTests.cs:1309)."""
+    (QueryTests.cs:1309).  The fixture graph is saved and loaded first,
+    so the plan scans parquet as a served store does; over the
+    in-memory fixture the optimizer folds the filter away at plan
+    time."""
+    from pg_age_digitaltwins_spark.store.graph_store import GraphStore
+
+    fixture_store.save(str(tmp_path))
+    client = DigitalTwinsSparkClient(GraphStore.load(fixture_store.spark, str(tmp_path)))
     plan = client.explain(
         "SELECT T.$dtId AS id FROM DIGITALTWINS T WHERE T.$dtId = 'room1'"
     )

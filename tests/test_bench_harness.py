@@ -145,6 +145,62 @@ def test_compact_summary_small_and_complete(spark):
     assert c["calib"] == out["calibration"]
 
 
+def _board_out(headline, analytics, wall=12.345):
+    """A full-run ``out`` dict shaped like a real board's: every group
+    present, every wall a 5-significant-digit float."""
+    return {
+        "metric": "headline_total_wall",
+        "value": 123.456,
+        "unit": "sec",
+        "sf": bench.SF_DIR,
+        "queries": {k: wall for k in headline},
+        "analytics": {k: wall for k in analytics},
+        "analytics_spread": {"graph_louvain": 3.512},
+        "analytics_isolated_first": {"graph_louvain": 24.441},
+        "calibration": {"spin_s": 0.389, "shuffle_s": 3.789},
+        "cdc": {"events_per_sec": 1.0, "tuned": {"steady_events_per_sec": 31585.7}},
+        "replication": {"rows_per_sec": 4341.8},
+        "sf1_scale_probe": {"keys": {f"k{i}": 1.0 for i in range(28)}},
+    }
+
+
+def test_compact_summary_real_board_fits_without_dropping():
+    """The shipped HEADLINE/ANALYTICS board is disjoint and its compact
+    line fits the cap whole (960 chars in BENCH_r17.json)."""
+    assert not set(bench.HEADLINE) & set(bench.ANALYTICS)
+    c = bench.compact_summary(_board_out(bench.HEADLINE, bench.ANALYTICS))
+    assert "queries_dropped" not in c
+    assert list(c["queries"]) == [*bench.HEADLINE, *bench.ANALYTICS]
+    assert len(json.dumps(c)) < 1100
+
+
+def test_compact_summary_rejects_keys_in_both_groups():
+    """A key in both groups would let the merged queries dict keep only
+    the analytics wall — it must fail loudly instead."""
+    out = _board_out(["k_shared", "k_head"], ["k_shared"])
+    with pytest.raises(ValueError, match="k_shared"):
+        bench.compact_summary(out)
+
+
+def test_compact_summary_cap_drops_keys_from_the_end():
+    """Past the cap, per-key entries go from the end of the board
+    (analytics first) until the line fits; headline walls stay, the
+    count is recorded, and the same input drops the same keys."""
+    head = [f"headline_key_{i:02d}" for i in range(12)]
+    ana = [f"analytics_key_with_a_long_name_{i:02d}" for i in range(40)]
+    out = _board_out(head, ana)
+    c = bench.compact_summary(out)
+    assert len(json.dumps(c)) < bench.COMPACT_CAP
+    kept = list(c["queries"])
+    board = [*head, *ana]
+    assert kept == board[: len(kept)]
+    assert set(head) <= set(kept)
+    assert c["queries_dropped"] == len(board) - len(kept) > 0
+    assert bench.compact_summary(out) == c
+    # the full record keeps every key
+    assert len(out["queries"]) + len(out["analytics"]) == len(board)
+
+
 def test_isolated_first_pass_recorded_and_counts_toward_min(spark):
     """r12 (verdict #2): the slowest key runs once BEFORE the analytics
     group; its wall lands in analytics_isolated_first and participates

@@ -2467,6 +2467,62 @@ def test_weighted_shortest_path_errors(spark):
                 "RETURN cost(p) AS c")
 
 
+def _crud_weighted_client(spark):
+    """The ``_weighted_client`` graph plus a self-loop b->b with no
+    weight, written from ``GraphStore.empty`` in one batch per table:
+    the empty base drops out at plan time, so each table is a single
+    in-memory ``LocalRelation``, over which the optimizer evaluates
+    projections (weight checks included) before any later filter."""
+    from pg_age_digitaltwins_spark.client import DigitalTwinsSparkClient
+    from pg_age_digitaltwins_spark.store.graph_store import GraphStore
+
+    c = DigitalTwinsSparkClient(GraphStore.empty(spark))
+    c.create_models([{"@id": "dtmi:sp:W;1", "@type": "Interface",
+                      "@context": "dtmi:dtdl:context;3", "contents": []}])
+    c.create_or_replace_digital_twins(
+        [{"$dtId": x, "$metadata": {"$model": "dtmi:sp:W;1"}} for x in "abcd"]
+    )
+    edges = [("a", "b", 1), ("b", "c", 1), ("c", "d", 1),
+             ("a", "c", 10), ("a", "d", 3)]
+    rels = [
+        {"$relationshipId": f"r{i}", "$sourceId": s, "$targetId": t,
+         "$relationshipName": "next", "w": w}
+        for i, (s, t, w) in enumerate(edges)
+    ]
+    rels.append({"$relationshipId": "loop", "$sourceId": "b",
+                 "$targetId": "b", "$relationshipName": "next"})
+    rels.append({"$relationshipId": "loop", "$sourceId": "c",
+                 "$targetId": "c", "$relationshipName": "next", "w": 0.5})
+    c.create_or_replace_relationships(rels)
+    return c
+
+
+def test_weighted_shortest_path_ignores_self_loop_weights(spark):
+    """A self-loop never lies on a shortest path, so its weight (none on
+    b->b, fractional on c->c) is never checked — also on a store built
+    from empty through CRUD writes."""
+    c = _crud_weighted_client(spark)
+    rows = c.query(
+        "MATCH p = shortestPath((a {`$dtId`: 'a'})"
+        "-[r:next*1..4 WEIGHT toInteger(r.w)]->(x)) "
+        "RETURN x.`$dtId` AS dst, cost(p) AS cost ORDER BY dst"
+    ).rows
+    assert rows == [
+        {"dst": "b", "cost": 1},
+        {"dst": "c", "cost": 2},
+        {"dst": "d", "cost": 3},
+    ]
+
+
+def test_weighted_louvain_ignores_bad_self_loop_weight(spark):
+    """Louvain drops self-loops, so the fractional weight on c->c is not
+    checked — also on a store built from empty through CRUD writes."""
+    c = _crud_weighted_client(spark)
+    rows = c.query("CALL graph.louvain(2, 1, 'w') YIELD node, community "
+                   "RETURN count(*) AS n").rows
+    assert rows == [{"n": 4}]
+
+
 def _cyclic_weighted_client(spark):
     """a->b->a 2-cycle (w 1 each) plus a->c (w 5): a can walk back to
     itself in 2 hops at cost 2 — the r13 ADVICE lo==0 stressor."""

@@ -10,6 +10,8 @@ by model_id / relationship name, the production layout).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -1184,3 +1186,75 @@ def test_label_kernel_broadcast_gates_force_off(no_auto_broadcast, monkeypatch):
         calls["n"] = 0
         fn().write.format("noop").mode("overwrite").save()
         assert calls["n"] > 0, "gate on must broadcast the vertex side"
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran) — counted through a job group
+    and the status tracker, so broadcast and subquery jobs count too."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_uncommitted_writes_plan_local_overlays(spark, tmp_path):
+    """CRUD overlays are LocalRelations, so uncommitted writes do not
+    slow reads: after a patch, a relationship create and a 100-twin
+    batch on a committed store, both tables plan LocalRelation leaves
+    (no statistics-free LogicalRDD), the Cypher 1-hop still broadcasts
+    with no Exchange, a point read of an unwritten twin is one Spark
+    job, and reloading the commit infers no schema (zero jobs)."""
+    from pg_age_digitaltwins_spark.client import DigitalTwinsSparkClient
+    from pg_age_digitaltwins_spark.store.commit_log import load_latest
+    from pg_age_digitaltwins_spark.store.tpch_loader import load_graph
+
+    root = str(tmp_path / "log")
+    client = DigitalTwinsSparkClient(load_graph(spark, SF_DIR))
+    assert client.commit(root) == 1
+    (store, version), jobs = _spark_jobs(spark, lambda: load_latest(spark, root))
+    assert (version, jobs) == (1, 0)
+    client = DigitalTwinsSparkClient(store)
+
+    client.update_digital_twin(
+        "cust-1", [{"op": "replace", "path": "/acctbal", "value": 1.5}]
+    )
+    client.create_or_replace_relationship(
+        "cust-2", "follows-1", {"$relationshipName": "follows", "$targetId": "cust-3"}
+    )
+    batch = [
+        {
+            "$dtId": f"cust-new-{i}",
+            "$metadata": {"$model": "dtmi:demo:Customer;1"},
+            "name": f"Customer new {i}",
+            "acctbal": float(i),
+        }
+        for i in range(100)
+    ]
+    results = client.create_or_replace_digital_twins(batch)
+    assert [r["status"] for r in results] == ["ok"] * 100
+
+    for df in (client.store.twins, client.store.relationships):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan, plan
+        assert "LogicalRDD" not in plan, plan
+
+    hop = client.query_df(
+        "MATCH (o)-[:placedBy]->(c) WHERE c.`$dtId` = 'cust-1' "
+        "RETURN o.`$dtId` AS o"
+    )
+    plan = _plan(hop)
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "BroadcastHashJoin" in plan, plan
+
+    doc, jobs = _spark_jobs(spark, lambda: client.get_digital_twin("cust-7"))
+    assert doc["$dtId"] == "cust-7"
+    assert jobs == 1
+    assert client.get_digital_twin("cust-1")["acctbal"] == 1.5
+    assert client.get_digital_twin("cust-new-42")["acctbal"] == 42.0
